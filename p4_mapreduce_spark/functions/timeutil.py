@@ -8,11 +8,12 @@ look type-agnostic are not:
   and raise ``DATATYPE_MISMATCH`` on NTZ;
 - ``ts.cast("double")`` is defined for LTZ but not NTZ.
 
-Older testdata generations stored nanos-as-long (handled in
-``sources/tables.load``), and a future generation could plausibly write
-tz-aware micros (LTZ). These helpers inspect the *actual* resolved type
-of the column and emit the right expression for each, so every operator
-that needs epoch arithmetic works against any of the three encodings —
+Older testdata generations stored nanos-as-long (``sources/tables``
+now declares ``ts timestamp_ntz``, so such a file fails its scan), and
+a future generation could plausibly write tz-aware micros (LTZ). These
+helpers inspect the *actual* resolved type of the column and emit the
+right expression for each, so every operator that needs epoch
+arithmetic works against any of the three encodings —
 and, critically, is **session-independent**: the NTZ path is pure
 calendar arithmetic (``timestampdiff`` from the NTZ epoch literal),
 bit-identical to DuckDB's ``epoch_us(ts)`` on naive timestamps under

@@ -6,10 +6,20 @@ LLM-pipeline tables ``documents`` / ``embeddings``.
 
 Scan-path notes for 100 TB:
 
-- We read plain ``spark.read.parquet`` and rely on Catalyst for column
-  pruning + predicate pushdown — every registered query is written so
-  filters sit directly on scan columns (verify with
-  ``plans.explain.assert_pushed_filters``).
+- ``SCHEMAS`` is the read contract: every table is read with its
+  declared schema, never an inferred one. Inference is a Spark job per
+  read (a ``parallelize`` + ``collect`` over the file footers), and
+  every query builds its frames through ``load``, so at 100 TB an
+  inferred read costs a driver round trip per table per call; a
+  declared read costs none. A file whose column type differs from the
+  declared one fails the scan loudly
+  (``FAILED_READ_FILE.PARQUET_COLUMN_DATA_TYPE_MISMATCH``) rather than
+  decoding into wrong values. ``tests/test_tables.py`` checks the
+  declarations against what Spark infers from every test-data scale,
+  which is what keeps them current.
+- Catalyst does column pruning + predicate pushdown — every
+  registered query is written so filters sit directly on scan columns
+  (verify with ``plans.explain.assert_pushed_filters``).
 - At cluster scale the same tables would be partitioned directories
   (e.g. ``orders/o_orderdate=.../``); ``load`` takes any path, so
   partition pruning comes for free when the layout has it.
@@ -21,7 +31,6 @@ from __future__ import annotations
 
 import os
 
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 TABLES = (
@@ -37,30 +46,68 @@ TABLES = (
     "embeddings",
 )
 
+# Spark DDL per table, equal to the schema Spark infers from the files
+# (the timestamps are parquet TIMESTAMP(MICROS) without UTC adjustment,
+# hence timestamp_ntz).
+SCHEMAS = {
+    "region": "r_regionkey int, r_name string",
+    "nation": "n_nationkey int, n_name string, n_regionkey int",
+    "customer": (
+        "c_custkey bigint, c_name string, c_nationkey int, c_acctbal double, "
+        "c_mktsegment string"
+    ),
+    "supplier": (
+        "s_suppkey bigint, s_name string, s_nationkey int, s_acctbal double"
+    ),
+    "part": (
+        "p_partkey bigint, p_name string, p_brand string, p_type string, "
+        "p_size int, p_retailprice double"
+    ),
+    "orders": (
+        "o_orderkey bigint, o_custkey bigint, o_orderstatus string, "
+        "o_totalprice double, o_orderdate timestamp_ntz, o_orderpriority string"
+    ),
+    "lineitem": (
+        "l_orderkey bigint, l_partkey bigint, l_suppkey bigint, "
+        "l_linenumber int, l_quantity double, l_extendedprice double, "
+        "l_discount double, l_tax double, l_returnflag string, "
+        "l_linestatus string, l_shipdate timestamp_ntz"
+    ),
+    "events": (
+        "event_id bigint, ts timestamp_ntz, user_id bigint, event_type string, "
+        "value double, props string"
+    ),
+    "documents": (
+        "doc_id bigint, text string, lang string, source string, n_chars bigint"
+    ),
+    "embeddings": "vec_id bigint, embedding array<float>, label int",
+}
+
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one table from ``{sf_dir}/{name}.parquet``.
+    """Read one table from ``{sf_dir}/{name}.parquet`` with its declared
+    schema ``SCHEMAS[name]``.
 
-    ``events.ts`` is parquet TIMESTAMP(NANOS), which Spark cannot
-    represent; with ``spark.sql.legacy.parquet.nanosAsLong`` it scans
-    as a long, and we truncate to microseconds here — bit-identical to
-    DuckDB's nanos→micros truncation, so oracle hashes line up.
+    Building the frame runs no Spark job: the declared schema replaces
+    the footer-reading inference job, which at 100 TB would be paid on
+    every table read of every call. There is no inference fallback. A
+    file column whose type differs from the declaration makes the scan
+    raise; a declared column the file lacks reads as null. The schema
+    contract test (``tests/test_tables.py``) compares ``SCHEMAS`` with
+    the inferred schema of every test-data scale.
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     # the caller may hand us a session without UTC set (the driver
     # does): timestamp rendering and date_trunc/window bucketing are
     # session-TZ dependent in Spark, while the DuckDB oracle is naive —
     # any other TZ would shift every timestamp result
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
-        # integer div, not float: nanos epochs (~1.7e18) exceed double precision
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return df
+    return spark.read.schema(SCHEMAS[name]).parquet(
+        os.path.join(sf_dir, f"{name}.parquet")
+    )
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

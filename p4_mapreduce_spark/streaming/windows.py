@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from p4_mapreduce_spark.functions.deterministic import fix_sql, fsum, fsum_sql
 from p4_mapreduce_spark.functions.timeutil import epoch_micros
 from p4_mapreduce_spark.registry import register
-from p4_mapreduce_spark.sources.tables import load
+from p4_mapreduce_spark.sources.tables import SCHEMAS, load
 
 SESSION_GAP_SECONDS = 1800.0
 
@@ -164,35 +164,28 @@ def stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """readStream over the events parquet, at the file's REAL timestamp
-    type.
+    """readStream over the events parquet with the declared batch schema
+    ``SCHEMAS["events"]``.
 
-    FileStreamSource needs a schema up front (no inference), but
-    hardcoding one is how round 2 broke: the testdata regenerated from
-    nanos-as-long to plain micros (→ TIMESTAMP_NTZ) and a stale
-    nanos→micros shim silently decoded every event into 1970. Reading
-    the footer schema via the batch reader (a driver-side metadata-only
-    open, no data scan) keeps the stream bit-identical to the batch
-    loader for any encoding. The legacy bigint case still gets the
-    exact integer nanos→micros truncation.
+    FileStreamSource needs a schema up front (no inference). Reading the
+    footer schema through the batch reader instead costs a Spark job
+    per call. A hardcoded schema once broke silently here: the testdata
+    regenerated from nanos-as-long to plain micros and a stale
+    nanos→micros shim decoded every event into 1970. The declared
+    schema has no shim, a file whose ``ts`` type differs fails the scan
+    loudly, and the schema contract test keeps the declaration equal to
+    the files.
     """
-    load(spark, sf_dir, "events")  # sets legacy-nanos + UTC tz confs
-    raw_schema = spark.read.parquet(
-        os.path.join(sf_dir, "events.parquet")
-    ).schema
+    load(spark, sf_dir, "events")  # pins the UTC session tz
     raw = (
-        spark.readStream.schema(raw_schema)
+        spark.readStream.schema(SCHEMAS["events"])
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
     )
-    if dict(raw.dtypes).get("ts") == "bigint":
-        raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif dict(raw.dtypes).get("ts") == "timestamp_ntz":
-        # Watermarks demand LTZ (EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE).
-        # load() above pinned the session tz to UTC, so this cast is
-        # epoch-preserving — naive wall time reinterpreted as UTC.
-        raw = raw.withColumn("ts", F.col("ts").cast("timestamp"))
-    return raw
+    # Watermarks demand LTZ (EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE).
+    # load() above pinned the session tz to UTC, so this cast is
+    # epoch-preserving — naive wall time reinterpreted as UTC.
+    return raw.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
 def streaming_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -425,8 +418,8 @@ def streaming_stateful_user_counts_tws(
 
 def stream_documents(spark: SparkSession, docs_dir: str) -> DataFrame:
     """readStream over a directory of documents parquet part-files,
-    one file per micro-batch (footer schema read like
-    read_events_stream — no hardcoded schema to go stale)."""
+    one file per micro-batch, with the schema read from the tranche
+    files' footers."""
     schema = spark.read.parquet(docs_dir).schema
     return (
         spark.readStream.schema(schema)
