@@ -1400,11 +1400,6 @@ _HOT_BIN_MAX_SALTS = 64
 # AQE join above the cap, loudly: salting is result-identical pair-
 # space reshaping, so correctness never depends on it.
 _HOT_LIST_CAP = 100_000
-# r13 A/B seam (the stagemat.STAGE_MAT idiom): False restores the
-# pre-r13 unsalted pair-join shape (probe side at the checkpointed
-# frame's own partition count) so the spread's cost/benefit stays
-# re-measurable on demand. Semantics identical either way.
-_UNSALTED_PROBE_SPREAD = True
 
 
 @register(
@@ -1624,20 +1619,15 @@ def overlap_pairs_rollup(sess: DataFrame, skew_safe: bool = True) -> DataFrame:
             # parallelism only when it sits below it — a no-op at the
             # 100 TB steady state, where the islands shuffle already
             # leaves a full round of partitions.
-            # r14 (ADVICE): the partition probe is gated on the stage
-            # checkpoint actually being in effect — on the
-            # STAGE_MAT=False A/B path `binned` is a raw plan, and the
-            # .rdd conversion would finalize its adaptive plan (and
-            # can execute upstream shuffle stages an extra time).
-            from p4_mapreduce_spark.stagemat import STAGE_MAT
-
+            # The partition probe needs `binned` to be a checkpoint:
+            # on a raw plan the .rdd conversion would finalize its
+            # adaptive plan (and can execute upstream shuffle stages an
+            # extra time). It always is one: stage_ck(binned) above
+            # gets no src_bytes, so the corpus-size gate never passes
+            # it through.
             par = binned.sparkSession.sparkContext.defaultParallelism
             probe = binned
-            if (
-                _UNSALTED_PROBE_SPREAD
-                and STAGE_MAT
-                and binned.rdd.getNumPartitions() < par
-            ):
+            if binned.rdd.getNumPartitions() < par:
                 probe = binned.repartition(par)
             a = probe.alias("a")
             b = binned.alias("b")

@@ -304,8 +304,8 @@ def _survivors_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     # table feeds the band melt plus both verify sides — without a
     # checkpoint each reference re-prints (and uncached, re-RUNS) the
     # whole docs->distinct->shingle->minhash subtree. Both frames are
-    # DISTINCT-TEXT-sized (sides is (gh, 2 ints); sigs is the same
-    # table the module persist-cache already materializes), so the
+    # DISTINCT-TEXT-sized (sides is (gh, 2 ints); sigs is the
+    # signature table, checkpointed inside _minhash_sig_table), so the
     # checkpoint rule allows them; each costs exactly ONE corpus scan
     # at first action, after which every downstream branch reads the
     # materialized RDD. This took the pipeline's printed big-table
@@ -313,9 +313,9 @@ def _survivors_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r13: the three stage checkpoints below predate the r12
     # corpus-size gate (raw localCheckpoint calls), so at local SF the
     # pipeline still paid three sequential materialization jobs per
-    # build while every "rescan" they prevent is served by the module
-    # persist / OS page cache — exactly the cost the r12 quiet-host
-    # A/B priced for the gated queries. Routing them through stage_ck
+    # build while every "rescan" they prevent is served by the OS
+    # page cache — exactly the cost the r12 quiet-host A/B priced for
+    # the gated queries. Routing them through stage_ck
     # (same src_bytes policy) keeps the audited 5-scan at-scale fold
     # shape (tests/test_plans.py audits with the gate disabled) and
     # reverts to the cheaper rescan shape below 16 MB of corpus.
@@ -325,14 +325,14 @@ def _survivors_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max((~is_test).cast("int")).alias("has_train"),
     ), src_bytes=_db)
     sigs = _minhash_sig_table(spark, sf_dir)
-    # Checkpoint two NARROW projections rather than the wide table:
-    # a checkpointed RDD is row-stored, so every downstream read
-    # deserializes full rows — checkpointing (gh, shingles, 16 bands)
-    # in one frame made the band melt drag the shingle arrays along
-    # and the verify sides drag the bands (measured +13% wall at
-    # sf0.1). The melt and the shingle projection are each read
-    # exactly twice, carry only what their readers use, and both stay
-    # distinct-text-sized.
+    # Above the gate, the readers get two NARROW checkpoints rather
+    # than reading the wide signature checkpoint: a checkpointed RDD
+    # is row-stored, so every downstream read deserializes full rows
+    # — reading (gh, shingles, 16 bands) from one frame made the band
+    # melt drag the shingle arrays along and the verify sides drag the
+    # bands (measured +13% wall at sf0.1). The melt and the shingle
+    # projection are each read exactly twice, carry only what their
+    # readers use, and both stay distinct-text-sized.
     bands_ck = stage_ck(melt_bands(sigs), src_bytes=_db)
     sh_ck = stage_ck(sigs.select("gh", "shingles"), src_bytes=_db)
     bl = bands_ck.join(sides, "gh")

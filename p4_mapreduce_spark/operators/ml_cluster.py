@@ -337,14 +337,6 @@ def kmeans_sample_fit_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Bounded driver-side fit cache, keyed like similarity._PQ_CB_CACHE:
-# the fitted centroids are k x 64 doubles (literal topology, not
-# data) — three registered queries (kmeans_embedding_clusters,
-# semdedup_pipeline, ivfadc_kmeans_search) share one fit per
-# (application, sf_dir, k, sample_n).
-_KMEANS_FIT_CACHE: dict[tuple[str, str, int, int], list[list[float]]] = {}
-
-
 def _np_assign(arr, C):
     """First-wins quantized-argmin cluster ids for an (n, d) float64
     row block against (k, d) centroids — ONE kernel shared by the
@@ -394,22 +386,14 @@ def fit_kmeans_centroids(
     ``floor(sum/count * 1e6 + 0.5) / 1e6`` like ``_fq_sql`` — the
     sub-quantum pairwise-vs-sequential summation reassociation is
     absorbed by the 1e-6 floor, the same argument the distributed
-    groupBy fit always relied on).
+    groupBy fit always relied on). Every call fits afresh (two bounded
+    collects); a query that needs one fit in several arms fits once
+    and passes the centroids down.
 
     ``sample_n=None`` keeps the old distributed full-corpus fit
     (O(N x k) distance work per round + a k x 65-double collect) —
     retained ONLY as kmeans_sample_fit_audit's reference arm; no
     composed pipeline may use it."""
-    spark = emb.sparkSession
-    key = (
-        spark.sparkContext.applicationId,
-        ";".join(sorted(emb.inputFiles())),
-        k,
-        sample_n or 0,
-    )
-    hit = _KMEANS_FIT_CACHE.get(key)
-    if hit is not None:
-        return hit
     init = emb.orderBy("vec_id").limit(k).collect()
     centroids = [[float(x) for x in r.embedding] for r in init]
 
@@ -475,9 +459,6 @@ def fit_kmeans_centroids(
                 else centroids[j]
                 for j in range(k)
             ]
-    if len(_KMEANS_FIT_CACHE) >= 4:  # bounded: a few (sf_dir, k) combos
-        _KMEANS_FIT_CACHE.clear()
-    _KMEANS_FIT_CACHE[key] = centroids
     return centroids
 
 

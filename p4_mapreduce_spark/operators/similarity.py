@@ -53,30 +53,19 @@ def _query_ids_sql() -> str:
     return ", ".join(str(i) for i in QUERY_IDS)
 
 
-# Bounded driver-side cache for the 5 query vectors (5x64 doubles):
-# the fetch is a tiny pushdown scan, but re-running it on every
-# invocation puts a whole extra Spark job in front of the scoring scan.
-# One entry, keyed like dedup._persist_sigs_bounded.
-_QVEC_CACHE: dict[tuple[str, str], tuple] = {}
-
-
-def _query_vectors(spark: SparkSession, sf_dir: str, emb: DataFrame):
+def _query_vectors(emb: DataFrame):
+    """The query ids and their vectors (5 x 64 doubles), fetched with
+    one tiny pushdown-scan job per call."""
     import numpy as np
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _QVEC_CACHE.get(key)
-    if hit is None:
-        qrows = sorted(
-            emb.where(F.col("vec_id").isin(*QUERY_IDS)).collect(),
-            key=lambda r: r.vec_id,
-        )
-        hit = (
-            np.array([r.vec_id for r in qrows], dtype=np.int64),
-            np.array([r.embedding for r in qrows], dtype=np.float64),
-        )
-        _QVEC_CACHE.clear()
-        _QVEC_CACHE[key] = hit
-    return hit
+    qrows = sorted(
+        emb.where(F.col("vec_id").isin(*QUERY_IDS)).collect(),
+        key=lambda r: r.vec_id,
+    )
+    return (
+        np.array([r.vec_id for r in qrows], dtype=np.int64),
+        np.array([r.embedding for r in qrows], dtype=np.float64),
+    )
 
 
 def _qdot_sql(a: str, b: str) -> str:
@@ -133,7 +122,7 @@ def ann_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # multi-split so every executor scores its own slice.
     emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
 
-    q_ids, Q = _query_vectors(spark, sf_dir, emb)
+    q_ids, Q = _query_vectors(emb)
 
     def _fix6(x: "np.ndarray") -> "np.ndarray":
         return np.floor(x * 1e6 + 0.5) / 1e6
@@ -505,7 +494,7 @@ def pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     from p4_mapreduce_spark.functions.deterministic import fix
 
     emb = load(spark, sf_dir, "embeddings")
-    cents = _pq_codebook(spark, sf_dir, emb)
+    cents = _pq_codebook(emb)
     coded = _pq_arrow_coded(
         emb.select("vec_id", "embedding"), cents, with_dists=True
     )
@@ -524,30 +513,16 @@ def pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Bounded driver-side codebook cache, keyed like _QVEC_CACHE: the
-# collect is tiny (16 x 64 doubles) but puts a whole Spark job in
-# front of every PQ query's plan build — cache one entry per
-# (application, sf_dir).
-_PQ_CB_CACHE: dict[tuple[str, str], dict[int, list[float]]] = {}
-
-
-def _pq_codebook(
-    spark: SparkSession, sf_dir: str, emb: DataFrame
-) -> dict[int, list[float]]:
-    """Collect the {_PQ_K}-entry codebook once (k-means-literal
-    topology; {_PQ_K} x {EMBEDDING_DIM} doubles on the driver)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _PQ_CB_CACHE.get(key)
-    if hit is None:
-        hit = {
-            int(r["vec_id"]): [float(v) for v in r["embedding"]]
-            for r in emb.where(F.col("vec_id") < _PQ_K)
-            .select("vec_id", "embedding")
-            .collect()
-        }
-        _PQ_CB_CACHE.clear()
-        _PQ_CB_CACHE[key] = hit
-    return hit
+def _pq_codebook(emb: DataFrame) -> dict[int, list[float]]:
+    """Collect the {_PQ_K}-entry codebook (k-means-literal topology;
+    {_PQ_K} x {EMBEDDING_DIM} doubles on the driver), one small job
+    per call."""
+    return {
+        int(r["vec_id"]): [float(v) for v in r["embedding"]]
+        for r in emb.where(F.col("vec_id") < _PQ_K)
+        .select("vec_id", "embedding")
+        .collect()
+    }
 
 
 def _pq_arrow_coded(
@@ -1084,8 +1059,8 @@ def _adc_topk(
 )
 def pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    cents = _pq_codebook(spark, sf_dir, emb)
-    q_ids, Q = _query_vectors(spark, sf_dir, emb)
+    cents = _pq_codebook(emb)
+    q_ids, Q = _query_vectors(emb)
     lut = _pq_query_luts(q_ids, Q, cents)
     coded = _pq_arrow_coded(emb.select("vec_id", "embedding"), cents)
     return _adc_topk(coded, q_ids, lut)
@@ -1135,10 +1110,10 @@ def ivfadc_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings").select(
         "vec_id", "label", "embedding"
     )
-    cents = _pq_codebook(spark, sf_dir, emb)
+    cents = _pq_codebook(emb)
     # ONE driver action for the query rows — vectors AND probe labels
     # together (r5 review: a separate labels collect was a third Spark
-    # job per invocation; the codebook collect above is cached).
+    # job per invocation, after the codebook collect above).
     qrows = sorted(
         emb.where(F.col("vec_id").isin(*QUERY_IDS)).collect(),
         key=lambda r: r.vec_id,
@@ -1211,17 +1186,29 @@ def _ivfadc_kmeans_oracle() -> str:
     tags=("similarity", "vector", "quantization", "ml", "pipeline"),
 )
 def ivfadc_kmeans_search(spark: SparkSession, sf_dir: str) -> DataFrame:
+    emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    return _ivfadc_kmeans_frame(emb, *_ivfadc_fit(emb))
+
+
+def _ivfadc_fit(emb: DataFrame):
+    """The learned coarse quantizer (k-means centroids) and the PQ
+    codebook: the two collected builds every IVFADC arm needs.
+    Queries with several arms build them once and pass them down."""
+    from p4_mapreduce_spark.operators.ml_cluster import fit_kmeans_centroids
+
+    return fit_kmeans_centroids(emb), _pq_codebook(emb)
+
+
+def _ivfadc_kmeans_frame(
+    emb: DataFrame, centroids: list[list[float]], cents: dict[int, list[float]]
+) -> DataFrame:
+    """ivfadc_kmeans_search over ``emb(vec_id, embedding)`` with a given
+    fit and codebook (see :func:`_ivfadc_fit`)."""
     import numpy as np
 
-    from p4_mapreduce_spark.operators.ml_cluster import (
-        fit_kmeans_centroids,
-        kmeans_assign_frame,
-    )
+    from p4_mapreduce_spark.operators.ml_cluster import kmeans_assign_frame
 
-    emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    centroids = fit_kmeans_centroids(emb)
     asg = kmeans_assign_frame(emb, centroids)
-    cents = _pq_codebook(spark, sf_dir, emb)
     # ONE bounded driver action: the 5 query vectors AND their fitted
     # coarse cells together (engine-computed, so the probe decision
     # can never drift from the registered assignment expression)
@@ -1383,31 +1370,24 @@ def _ivfadc_multiprobe_oracle(nprobe: int = _NPROBE) -> str:
     tags=("similarity", "vector", "quantization", "ml"),
 )
 def ivfadc_multiprobe_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _multiprobe_frame(spark, sf_dir, _NPROBE)
+    emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    return _multiprobe_frame(emb, *_ivfadc_fit(emb), _NPROBE)
 
 
 def _multiprobe_frame(
-    spark: SparkSession, sf_dir: str, nprobe: int
+    emb: DataFrame,
+    centroids: list[list[float]],
+    cents: dict[int, list[float]],
+    nprobe: int,
 ) -> DataFrame:
-    """Multi-probe IVFADC at an arbitrary ``nprobe`` — shared by the
-    registered nprobe={_NPROBE} search and the recall curve's arms."""
-    import numpy as np
+    """Multi-probe IVFADC at an arbitrary ``nprobe`` over
+    ``emb(vec_id, embedding)`` with a given fit and codebook (see
+    :func:`_ivfadc_fit`) — shared by the registered nprobe={_NPROBE}
+    search and the recall curve's arms."""
+    from p4_mapreduce_spark.operators.ml_cluster import kmeans_assign_frame
 
-    from p4_mapreduce_spark.operators.ml_cluster import (
-        fit_kmeans_centroids,
-        kmeans_assign_frame,
-    )
-
-    emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    centroids = fit_kmeans_centroids(emb)
     asg = kmeans_assign_frame(emb, centroids)
-    cents = _pq_codebook(spark, sf_dir, emb)
-    qrows = sorted(
-        emb.where(F.col("vec_id").isin(*QUERY_IDS)).collect(),
-        key=lambda r: r.vec_id,
-    )
-    q_ids = np.array([r.vec_id for r in qrows], dtype=np.int64)
-    Q = np.array([r.embedding for r in qrows], dtype=np.float64)
+    q_ids, Q = _query_vectors(emb)
     cells = _qprobe_cells(Q, centroids, nprobe)
     probes_of = {
         int(qid): [int(c) for c in cells[i]]
@@ -1532,7 +1512,7 @@ def _nprobe_recall_oracle() -> str:
     tags=("similarity", "vector", "quantization", "audit"),
 )
 def ivfadc_nprobe_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load(spark, sf_dir, "embeddings")
+    emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     exact = ann_bruteforce_topk(spark, sf_dir).select(
         "query_id", "neighbor_id"
     )
@@ -1545,9 +1525,11 @@ def ivfadc_nprobe_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).alias("n_hits"))
         )
 
-    h1 = hits(ivfadc_kmeans_search(spark, sf_dir))
-    h2 = hits(ivfadc_multiprobe_search(spark, sf_dir))
-    h4 = hits(_multiprobe_frame(spark, sf_dir, _NPROBE_WIDE))
+    # one k-means fit and one codebook for all three IVFADC arms
+    centroids, cents = _ivfadc_fit(emb)
+    h1 = hits(_ivfadc_kmeans_frame(emb, centroids, cents))
+    h2 = hits(_multiprobe_frame(emb, centroids, cents, _NPROBE))
+    h4 = hits(_multiprobe_frame(emb, centroids, cents, _NPROBE_WIDE))
     base = emb.where(F.col("vec_id").isin(*QUERY_IDS)).select(
         F.col("vec_id").alias("query_id")
     )

@@ -1,17 +1,15 @@
-"""Stage-materialization seam (r12 verdict ask #1).
+"""Stage materialization: one policy point for the lazy checkpoints
+that fold a multi-branch subtree into one materialized frame.
 
-The r11 scan folds pinned multi-branch subtrees with lazy
-``localCheckpoint(eager=False)`` calls. Routing the fold-touched
-queries' checkpoints through :func:`stage_ck` makes the r10-shape vs
-r11-shape A/B scriptable (tools/ab_fold_shapes.py flips
-``STAGE_MAT``), so the priced checkpoint costs in SCALE.md are
-re-measurable on demand instead of arguable — and it is where the
-r12 corpus-size gate and the reliable-checkpoint deployment switch
-live (one policy point instead of 10 scattered call sites).
+A frame read by several branches of one plan re-derives its whole
+subtree once per branch unless it is materialized. :func:`stage_ck`
+decides, per call, whether the re-derivation is worth a checkpoint
+(the corpus-size gate below) and which checkpoint to take (local or
+reliable, the ``RELIABLE`` deployment setting). Every materialization
+lives for one query build: nothing is kept between calls.
 
-Semantics are UNAFFECTED by the flag: a localCheckpoint truncates
-lineage and materializes, it never changes rows. Oracles pass in both
-shapes (the A/B tool asserts it).
+Semantics are unaffected by the decision: a checkpoint truncates
+lineage and materializes, it never changes rows.
 """
 
 from __future__ import annotations
@@ -19,11 +17,6 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame
-
-# True  = r11 fold shape: multi-branch bounded frames materialize once.
-# False = r10 shape: every branch re-derives its subtree (more printed
-#         corpus scans, no checkpoint write). Flip ONLY for A/B probes.
-STAGE_MAT = True
 
 # False = executor-local checkpoint storage (single-node default: an
 #         executor loss re-runs the whole deterministic batch query,
@@ -35,17 +28,13 @@ STAGE_MAT = True
 #         claim stays a tested fact rather than a comment.
 RELIABLE = False
 
-# r12 corpus-size gate (verdict ask #1's adjudicated fix): the quiet-
-# host A/B showed the checkpoints COST 1.1-1.4x at sf0.1 (0.6 MB of
-# documents — every "rescan" they prevent is served by the module
-# persist / OS page cache, so the materialization is pure overhead),
-# while the saving they buy is real only once the re-derived subtree
-# is a genuine corpus pass (cache-cold, or data past memory scale).
-# Queries pass their source-table size (driver-side FS metadata, no
-# job); below the threshold stage_ck is an identity and the plan is
-# the r10 shape. tools/ab_fold_shapes.py measured the crossover —
-# see SCALE.md r12 for the numbers behind the default.
-SIZE_GATE = True
+# Corpus-size gate: a checkpoint costs a write and a read, while the
+# re-derivation it prevents is a scan of the source table, which at
+# local scale the OS page cache serves. Queries pass their source
+# table's size (driver-side FS metadata, no job); below the threshold
+# stage_ck is an identity and every branch re-derives its subtree.
+# The crossover was measured between 4.5 MB and 34 MB of source
+# parquet — see SCALE.md r12 for the numbers behind the default.
 STAGE_MAT_MIN_BYTES = 16 * 1024 * 1024
 
 
@@ -70,31 +59,24 @@ def table_bytes(sf_dir: str, table: str = "documents"):
 
 def stage_ck(df: DataFrame, src_bytes=None, compute_heavy=False) -> DataFrame:
     """Lazy localCheckpoint under the stage-materialization policy;
-    identity when the A/B seam is flipped to the r10 shape OR when the
-    corpus-size gate says the rescan is cheaper than the checkpoint;
-    reliable filesystem checkpoint when RELIABLE deployment mode is
-    on.
+    identity when the corpus-size gate says the rescan is cheaper than
+    the checkpoint; reliable filesystem checkpoint when RELIABLE
+    deployment mode is on.
 
-    ``compute_heavy`` exempts the frame from the corpus-size gate
-    (r13): the gate prices a re-derivation as a SCAN of ``src_bytes``,
-    which is the right model for relational subtrees but wrong when
-    the subtree's cost is CPU that byte-sizing cannot see. The
-    documented contract (broadened r14 per ADVICE — the r13 uses
-    already spanned both cases): (a) per-row kernel CPU — in-tree
-    codec decodes, Arrow kernels, token explodes (measured r13:
-    multimodal_phash_neardup 4.07s -> 1.79s at sf0.1 once the
-    decoded-hash aggregate is materialized, while its source is
-    0.6 MB — far under the 16 MB gate); and (b) post-shuffle
-    aggregation CPU re-run per consumer when the frame feeds several
-    branches (the frequent_itemsets basket frame). In both, what the
-    checkpoint saves is compute the byte-keyed gate prices at zero.
-    The STAGE_MAT A/B seam still applies, so the fold-shape probe can
-    price these checkpoints too."""
-    if not STAGE_MAT:
-        return df
+    ``compute_heavy`` exempts the frame from the corpus-size gate: the
+    gate prices a re-derivation as a SCAN of ``src_bytes``, which is
+    the right model for relational subtrees but wrong when the
+    subtree's cost is CPU that byte-sizing cannot see: (a) per-row
+    kernel CPU — in-tree codec decodes, Arrow kernels, token explodes,
+    MinHash signatures (measured r13: multimodal_phash_neardup 4.07s
+    -> 1.79s at sf0.1 once the decoded-hash aggregate is materialized,
+    while its source is 0.6 MB — far under the 16 MB gate); and (b)
+    post-shuffle aggregation CPU re-run per consumer when the frame
+    feeds several branches (the frequent_itemsets basket frame). In
+    both, what the checkpoint saves is compute the byte-keyed gate
+    prices at zero. A call without ``src_bytes`` always checkpoints."""
     if (
-        SIZE_GATE
-        and not compute_heavy
+        not compute_heavy
         and src_bytes is not None
         and src_bytes < STAGE_MAT_MIN_BYTES
     ):

@@ -74,7 +74,27 @@ def test_minhash_no_shingle_explode(spark, sf_dir):
     """Minhash signatures are computed with per-row array lambdas; the
     plan must never explode the shingle arrays (per-shingle rows are
     what kill shingle pipelines at scale). The only Generate allowed
-    is the 4-rows-per-doc band melt."""
+    is the 4-rows-per-doc band melt.
+
+    The signature table is checkpointed inside the query, so the
+    query's plan prints it as one RDD scan: the shingle/hash subtree
+    is audited on ``minhash_signatures`` itself."""
+    import pyspark.sql.functions as F
+
+    from p4_mapreduce_spark.operators.dedup import minhash_signatures
+    from p4_mapreduce_spark.sources.tables import load
+
+    groups = (
+        load(spark, sf_dir, "documents")
+        .groupBy(F.md5("text").alias("gh"))
+        .agg(F.min("text").alias("rtext"))
+    )
+    sig_plan = plan_string(minhash_signatures(groups), mode="simple")
+    # not blind: the shingle and hash lambdas are in the audited plan
+    assert "md5(cast(concat(x," in sig_plan, sig_plan
+    assert "concat_ws(_, element_at(" in sig_plan, sig_plan
+    assert "explode(shingles" not in sig_plan, sig_plan
+    assert "Generate" not in sig_plan, sig_plan
     df = REGISTRY["dedup_minhash_lsh"].fn(spark, sf_dir)
     plan = plan_string(df, mode="simple")
     assert "explode(shingles" not in plan, plan
@@ -181,7 +201,7 @@ _SHUFFLE_CAP_EXEMPT = {
     # either a distinct-text-sized frame (bounded under duplicate
     # growth — the collapse is the point) or output-bound pair rows.
     "dedup_jaccard_prefix",
-    # Collapse + persisted distinct-text signature table + band melt
+    # Collapse + checkpointed distinct-text signature table + band melt
     # join + verify + member expansion: every exchange moves a
     # distinct-text-sized frame (bounded under duplicate growth) or
     # output-bound pair rows; probe-flat through the x60 corpus.
@@ -435,25 +455,9 @@ _BIG_TABLE_SCAN_BOUNDS = {
     "ccnet_perplexity_buckets": 4,
     "data_mixture_manifest": 3,
     "data_quality_audit": 3,
-    # r11: decontaminate_test_split got the dedup_minhash_incremental
-    # checkpoint treatment (10 -> 2 cold; the pin leaves the same
-    # headroom for call-order-dependent runtime bloom-filter builds).
-    # r13 re-audit: still 2 cold prints, both [doc_id]-only member
-    # expansions — the +4 headroom is exclusively for the
-    # InjectRuntimeFilter bloom scans that appear once the sig-table
-    # persist is marked (beneficial pruning, not rescans).
-    "decontaminate_test_split": 6,
+    # decontaminate_test_split and dedup_minhash_incremental print 2
+    # scans each, both [doc_id]-only member expansions: default pin.
     "dedup_jaccard_prefix": 4,
-    # r11: dedup_minhash_incremental's side flags / band melt /
-    # shingle projection are localCheckpoint-ed (15 -> 6). The 6: two
-    # member-expansion md5 projections, plus up to four scans inside
-    # runtime bloom_filter_agg subqueries Catalyst injects to prune
-    # the band join once the sig-table persist is marked (call-order
-    # dependent: a cold first build prints 2) — those are selective
-    # pruning builds, the opposite of the rescan smell this gate
-    # hunts, so they ride inside the pin rather than being regex-ed
-    # away.
-    "dedup_minhash_incremental": 6,
     # r11: neardup_source_matrix composes dedup_minhash_lsh's pair
     # frame (checkpointed) + two source-label projections + the size
     # table — 4 cheap (doc_id, source) prints, no subtree rescans.
@@ -461,12 +465,8 @@ _BIG_TABLE_SCAN_BOUNDS = {
     # r11: dedup_minhash_lsh checkpoints the band melt + shingle
     # projection -> 14 dropped to 4 printed scans, ALL member-expansion
     # md5 projections (narrow doc_id+md5(text) passes the pair->doc
-    # expansion semantics need — not foldable subtree rescans); the
-    # pin's +2 over the measured 4 is headroom for Catalyst's
-    # call-order-dependent InjectRuntimeFilter bloom subqueries, each
-    # of which prints one beneficial pruning scan (r12: tightened 8->6
-    # after the sweep re-measure).
-    "dedup_minhash_lsh": 6,
+    # expansion semantics need — not foldable subtree rescans).
+    "dedup_minhash_lsh": 4,
     "dedup_ngram_jaccard": 4,
     "frequent_itemsets_pairs": 4,
     "heavy_hitters_words": 3,
@@ -493,14 +493,9 @@ _BIG_TABLE_SCAN_BOUNDS = {
     "join_skew_split_hot_keys": 5,
     # r11: kl_source_drift checkpoints swc + kept (8 -> 0 printed).
     "kl_source_drift": 4,
-    # r13 audit: 6 documents prints, all [text]-only md5/shingle
-    # projections — the audit's two arms (LSH candidate pairs vs the
-    # exact-Jaccard ground-truth verify) each re-expand pair ids to
-    # text like dedup_minhash_lsh's member expansions; the signature
-    # subtree itself is persisted/checkpointed (its scans don't
-    # print). Ground truth NEEDS the exact arm — fold further only by
-    # dropping the audit's point.
-    "minhash_recall_audit": 6,
+    # minhash_recall_audit: both arms (LSH candidate pairs vs the
+    # exact-Jaccard ground truth) read only the checkpointed signature
+    # table: default pin.
     # r11: mixture checkpoints the (lang x 256) histogram (9 -> 0).
     "mixture_temperature_resample": 4,
     "mrl_truncation_recall": 4,
@@ -548,7 +543,7 @@ _BIG_TABLE_SCAN_BOUNDS = {
 }
 
 
-def test_all_plans_healthy(spark, sf_dir):
+def test_all_plans_healthy(spark, sf_dir, monkeypatch):
     """Whole-registry plan audit: no cartesian products, no
     row-at-a-time Python UDFs, no unexpected nested-loop joins, no
     runaway shuffle counts, no global Sort/Window funneled through an
@@ -592,19 +587,11 @@ def test_all_plans_healthy(spark, sf_dir):
     # r12: the corpus-size gate turns the stage_ck materializations
     # OFF below STAGE_MAT_MIN_BYTES — at the audit's test SF the plans
     # would print the UNFOLDED (r10) shapes and the fold pins would be
-    # meaningless. Audit the AT-SCALE shape: gate disabled for the
-    # sweep, restored after.
+    # meaningless. Audit the AT-SCALE shape: zero threshold for the
+    # sweep.
     import p4_mapreduce_spark.stagemat as stagemat
 
-    prev_gate = stagemat.SIZE_GATE
-    stagemat.SIZE_GATE = False
-    # Canonical cache state: some subtrees (the MinHash signature
-    # table) ride a bounded module persist-cache, and a persisted
-    # subtree prints as InMemoryRelation — hiding its FileScans — so
-    # scan counts would depend on which tests ran first. Clear the
-    # cache so every plan prints its UNCACHED (worst-case) scan count,
-    # deterministically; the pins below are measured in this state.
-    spark.catalog.clearCache()
+    monkeypatch.setattr(stagemat, "STAGE_MAT_MIN_BYTES", 0)
     try:
         plans = {
             name: plan_string(spec.fn(spark, sf_dir), mode="simple")
@@ -612,7 +599,6 @@ def test_all_plans_healthy(spark, sf_dir):
         }
     finally:
         spark.conf.set("spark.sql.maxMetadataStringLength", prev_meta_len)
-        stagemat.SIZE_GATE = prev_gate
     for name, plan in plans.items():
         scans = Counter(
             re.findall(

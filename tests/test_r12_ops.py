@@ -34,7 +34,7 @@ def test_anisotropy_overflow_guard_fires_on_collapsed_corpus(
     assert got[0] == 1.0
 
 
-def test_stage_ck_reliable_parity(spark, sf_dir, tmp_path):
+def test_stage_ck_reliable_parity(spark, sf_dir, tmp_path, monkeypatch):
     """r12 verdict ask #5: the documented one-line local->reliable
     checkpoint swap for the stage-materialized fold frames, EXECUTED.
     decontaminate_test_split (three stage_ck sites) must produce
@@ -53,9 +53,9 @@ def test_stage_ck_reliable_parity(spark, sf_dir, tmp_path):
     want = sorted(map(tuple, fn(spark, sf_dir).collect()))
 
     prior_dir = spark.sparkContext.getCheckpointDir()
-    prior_size_gate = stagemat.SIZE_GATE
-    stagemat.RELIABLE = True
-    stagemat.SIZE_GATE = False  # force materialization at test SF
+    monkeypatch.setattr(stagemat, "RELIABLE", True)
+    # force materialization at test SF
+    monkeypatch.setattr(stagemat, "STAGE_MAT_MIN_BYTES", 0)
     try:
         if prior_dir is None:
             with pytest.raises(RuntimeError, match="checkpoint directory"):
@@ -63,8 +63,7 @@ def test_stage_ck_reliable_parity(spark, sf_dir, tmp_path):
         spark.sparkContext.setCheckpointDir(str(tmp_path / "stage_ckpt"))
         got = sorted(map(tuple, fn(spark, sf_dir).collect()))
     finally:
-        stagemat.RELIABLE = False
-        stagemat.SIZE_GATE = prior_size_gate
+        monkeypatch.undo()
         if prior_dir is not None:
             spark.sparkContext.setCheckpointDir(prior_dir)
     assert got == want

@@ -80,13 +80,9 @@ def test_semdedup_subblock_parity(spark, sf_dir, tmp_path):
 def test_kmeans_sampled_fit_runs_no_iteration_jobs(spark, sf_dir):
     """The sampled fit must not launch per-iteration Spark jobs: two
     bounded collects total (k-row init + S-row sample)."""
-    from p4_mapreduce_spark.operators.ml_cluster import (
-        _KMEANS_FIT_CACHE,
-        fit_kmeans_centroids,
-    )
+    from p4_mapreduce_spark.operators.ml_cluster import fit_kmeans_centroids
     from p4_mapreduce_spark.sources.tables import load
 
-    _KMEANS_FIT_CACHE.clear()
     emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     tracker = spark.sparkContext.statusTracker()
     before = len(tracker.getJobIdsForGroup(None) or [])

@@ -1,15 +1,15 @@
-"""Per-query optimization profiler for the r14 round.
+"""Per-query optimization profiler.
 
 For each named query: dump `.explain("formatted")` to
-``plans/r14/<name>_<suffix>.txt``, then time the noop-sink execution
+``plans/profile/<name>_<suffix>.txt``, then time the noop-sink execution
 (bench.py methodology: one warm run that pays codegen, then min of N
 timed runs) and print wall + UI-REST stage metrics (input bytes /
 shuffle write / max vs median task) as one JSON line per query.
 
 Usage:
-    python tools/profile_r14.py [--sf DIR] [--runs N] [--suffix before]
+    python tools/profile_queries.py [--sf DIR] [--runs N] [--suffix before]
                                 [--no-plan] name1 name2 ...
-    python tools/profile_r14.py --all          # every headline query
+    python tools/profile_queries.py --all          # every headline query
 
 DataFrame *construction* is timed separately (some queries run eager
 plan-build jobs — the overlap hot-bin census, the PCA fit) so the
@@ -66,7 +66,7 @@ def main() -> None:
         i += 1
 
     spark = get_spark(
-        app_name="profile-r14", extra_conf={"spark.ui.enabled": "true"}
+        app_name="profile", extra_conf={"spark.ui.enabled": "true"}
     )
     spark.sparkContext.setLogLevel("ERROR")
     registry = load_all()
@@ -78,7 +78,7 @@ def main() -> None:
     plans_dir = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "plans",
-        "r14",
+        "profile",
     )
     os.makedirs(plans_dir, exist_ok=True)
 
@@ -88,7 +88,7 @@ def main() -> None:
 
     for name in names:
         spec = registry[name]
-        spark.sparkContext.setJobDescription(f"r14-profile:{name}")
+        spark.sparkContext.setJobDescription(f"profile:{name}")
         t0 = time.perf_counter()
         df = spec.fn(spark, sf_dir)
         construct = time.perf_counter() - t0
